@@ -8,7 +8,7 @@ percentile_approx quantiles).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -17,7 +17,10 @@ class ProfileConfig:
 
     Mirrors the reference's ``ProfileReport(df, bins=10, sample=5,
     corr_reject=0.9)`` signature (``__init__.py::ProfileReport``, public
-    v1.1.13) and adds the scale/exactness switches the reference lacks.
+    v1.1.13) and adds the exactness switches and the decimal quirk fix
+    the reference lacks.  ``corr_reject=None`` skips the correlation
+    matrix and CORR rejection.  Execution tuning (chunk caps, size
+    bands, sketch precision) lives next to the code it tunes.
     """
 
     # --- reference-compatible knobs -------------------------------------
@@ -28,67 +31,18 @@ class ProfileConfig:
 
     # --- exact vs approximate (scale switches) ---------------------------
     exact_distinct: bool = False   # False => approx_count_distinct (HLL++)
-    # rsd 0.05 benches ~14x faster than 0.01 (Spark's HLL++ register count
-    # grows steeply with precision); ±5% distinct counts is plenty for
-    # type dispatch and report display.  Oracle tests run exact anyway.
-    distinct_rsd: float = 0.05     # HLL++ relative standard deviation
     exact_quantiles: bool = False  # False => percentile_approx
-    quantile_accuracy: int = 10000  # percentile_approx accuracy parameter
-    quantiles: tuple[float, ...] = (0.05, 0.25, 0.5, 0.75, 0.95)
 
-    # --- quirk-fix flags (reference quirks preserved by default) ---------
+    # --- quirk fix (reference quirk preserved when False) ----------------
     # The reference hardcodes n_infinite = 0 (base.py::describe_1d); we
     # always count real infinities because it costs nothing in the wide agg.
     # Decimal columns: the reference mis-dispatches parameterized
     # decimal(p,s) (SURVEY §1.2); fix_decimal=True routes them to NUM.
     fix_decimal: bool = True
-    # Complex types: the reference raises NotImplementedError (with the
-    # famous "stuct" typo); profile_complex=True profiles array/map/struct.
-    profile_complex: bool = True
-
-    # --- physical execution ----------------------------------------------
-    max_agg_exprs: int = 250       # chunk wide aggs to dodge codegen limits
-    compute_correlations: bool = True
-    compute_histograms: bool = True
-    compute_mad: bool = True
-    # Small-input fast path: a file-backed input smaller than
-    # cores x 4 MiB cannot reach core-parallelism at the scan (parquet
-    # row groups bound splits), so each profiling chunk runs as a
-    # ~1-task pass.  When True, describe() splits the chunk lists finer
-    # (wide_agg._CHUNK_CAP_SMALL) and runs more of them concurrently —
-    # chunk-level concurrency with column pruning substitutes for scan
-    # parallelism.  Bit-identical values under any chunking; inert for
-    # non-file frames and for inputs that parallelize at the scan.
-    parallelize_small_input: bool = True
-    # Tiny-input band (below the 4 MiB fine-chunk band): when a
-    # file-backed input is under this many bytes, the per-column
-    # distinct-value volume is trivially bounded, so the frequency pass
-    # skips its scale-safe bucket pre-prune phase (one fewer
-    # exchange+window of pure per-stage overhead; identical results —
-    # the bucket phase only drops rows that cannot reach the global
-    # top-k).  Measured 0.10-0.15s per table at sf0.1 local[32].
-    # 0 disables (always two-phase).
-    tiny_input_bytes: int = 1 << 20
 
     def exact(self) -> "ProfileConfig":
         """Return a copy in fully-exact mode (for oracle parity tests)."""
-        return ProfileConfig(
-            bins=self.bins,
-            sample=self.sample,
-            corr_reject=self.corr_reject,
-            top_k=self.top_k,
-            exact_distinct=True,
-            exact_quantiles=True,
-            quantiles=self.quantiles,
-            fix_decimal=self.fix_decimal,
-            profile_complex=self.profile_complex,
-            max_agg_exprs=self.max_agg_exprs,
-            compute_correlations=self.compute_correlations,
-            compute_histograms=self.compute_histograms,
-            compute_mad=self.compute_mad,
-            parallelize_small_input=self.parallelize_small_input,
-            tiny_input_bytes=self.tiny_input_bytes,
-        )
+        return replace(self, exact_distinct=True, exact_quantiles=True)
 
 
 DEFAULT_CONFIG = ProfileConfig()

@@ -124,21 +124,14 @@ def correlation_matrix(df: DataFrame,
         *[safe_all[f"__x{pos[c]}"].cast("double").alias(s)
           for c, s in zip(num_cols, safe)])
     if len(num_cols) <= _DECLARATIVE_MAX_COLS:
-        from spark_df_profiling_spark.config import DEFAULT_CONFIG
-        from spark_df_profiling_spark.plans.wide_agg import run_chunked_agg
+        from spark_df_profiling_spark.plans.wide_agg import (
+            raise_codegen_max_fields, run_chunked_agg)
         from spark_df_profiling_spark.sources import (
-            input_bytes, scan_parallelism)
+            input_bytes, scan_cannot_fan_out, scan_parallelism)
         # The pair aggregates hold ~9 buffer slots each, so even the
         # 8-column matrix (28 pairs ≈ 250 slots) exceeds the default
-        # codegen.maxFields=100 and silently demotes the whole agg to
-        # interpreted execution (measured 2.7s vs 0.8s codegen'd on
-        # sf0.1 lineitem).  describe() already raises the ceiling; the
-        # standalone operator must not depend on a profile having run
-        # first in the same session.
-        try:
-            df.sparkSession.conf.set("spark.sql.codegen.maxFields", "500")
-        except Exception:
-            pass
+        # codegen.maxFields.
+        raise_codegen_max_fields(df.sparkSession)
         # Same small-input band as describe(): a single-row-group file
         # pins the matrix job to ~1 task however many cores exist, so
         # the pair expressions are fanned out as concurrent fine chunks
@@ -146,11 +139,9 @@ def correlation_matrix(df: DataFrame,
         # each expression runs over the full input in exactly one job;
         # measured 0.78s -> 0.31s best on the 8-column sf0.1 matrix).
         # At scale the band is off and the matrix stays a one-scan job.
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        src_bytes = input_bytes(df)
-        rg = scan_parallelism(df)
-        small = ((4 << 20) <= src_bytes < cores * (4 << 20)
-                 and rg is not None and rg < cores)
+        small = scan_cannot_fan_out(
+            input_bytes(df), scan_parallelism(df),
+            df.sparkSession.sparkContext.defaultParallelism)
         exprs = correlation_exprs(sel, safe)
         # completeness guard: the ml path returns {} when listwise
         # deletion leaves nothing (Correlation.corr raises on empty
@@ -160,7 +151,7 @@ def correlation_matrix(df: DataFrame,
             for s in safe)
         exprs.append(f"count(CASE WHEN {allnn} THEN 1 END) "
                      f"AS `__n_complete`")
-        row = run_chunked_agg(sel, exprs, DEFAULT_CONFIG, small_input=small)
+        row = run_chunked_agg(sel, exprs, small_input=small)
         if not int(row.get("__n_complete") or 0):
             return {}
         # decode_correlation_row keys pairs by POSITION (__corr_{i}_{j});
@@ -182,29 +173,6 @@ def correlation_matrix(df: DataFrame,
         for j, y in enumerate(num_cols):
             v = float(arr[i][j])
             out[(x, y)] = v if not math.isnan(v) else float("nan")
-    return out
-
-
-def pairwise_correlations(df: DataFrame,
-                          num_cols: list[str]) -> dict[tuple[str, str], float]:
-    """Fallback path: ``df.stat.corr`` per pair (reference behavior).
-
-    O(k^2) jobs — only sensible for k <= 3 or when pyspark.ml is
-    unavailable.  NOTE: semantics differ from :func:`correlation_matrix`
-    on null placement — ``df.stat.corr`` drops nulls pairwise, the matrix
-    path listwise; the reference uses listwise (na.drop over all NUM cols).
-    """
-    clean = df.select(
-        *[df[c].cast("double").alias(c) for c in num_cols]).na.drop("any")
-    out: dict[tuple[str, str], float] = {}
-    for i, x in enumerate(num_cols):
-        for j, y in enumerate(num_cols):
-            if j < i:
-                out[(x, y)] = out[(y, x)]
-            elif j == i:
-                out[(x, y)] = 1.0
-            else:
-                out[(x, y)] = clean.stat.corr(x, y)
     return out
 
 

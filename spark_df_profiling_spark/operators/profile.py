@@ -32,7 +32,13 @@ from spark_df_profiling_spark.config import DEFAULT_CONFIG, ProfileConfig
 from spark_df_profiling_spark.operators import correlation as C
 from spark_df_profiling_spark.operators import frequency as FR
 from spark_df_profiling_spark.plans import wide_agg as W
-from spark_df_profiling_spark.sources import input_bytes, scan_parallelism
+from spark_df_profiling_spark.sources import (
+    input_bytes, scan_cannot_fan_out, scan_parallelism)
+
+# Tiny-input band: a file-backed input under this many bytes runs the
+# single-phase frequency form (see describe()).  Disjoint from the
+# small-input band, which starts at sources.CORE_SCAN_BYTES.
+TINY_INPUT_BYTES = 1 << 20
 
 # Explicit result schema — stable across inputs (the driver smoke check
 # requires a stable schema for entry()).
@@ -148,12 +154,9 @@ def describe(df: DataFrame,
     # and more jobs run concurrently — chunk-level concurrency with
     # column pruning is the parallelization mechanism when the scan
     # itself cannot fan out.  Values are bit-identical under any
-    # chunking; inert for non-file frames (_input_bytes 0) and for
-    # inputs large enough to parallelize at the scan.  Lower bound
-    # 4 MiB: below it a chunk's single-task pass is already trivial and
-    # splitting only multiplies per-job submission overhead (measured:
-    # fine chunks took profile(documents, 584 KB) from 0.80s to 1.09s
-    # while taking profile(lineitem, 11 MB) from 2.62s to 2.46s).
+    # chunking; inert for non-file frames (input_bytes 0) and for
+    # inputs large enough to parallelize at the scan (the band and its
+    # floor: sources.scan_cannot_fan_out).
     cores = spark.sparkContext.defaultParallelism
     # one inputFiles() py4j round-trip (~10-30ms), shared by the byte
     # band, the row-group probe, and the T5 memsize below
@@ -168,11 +171,8 @@ def describe(df: DataFrame,
     # row-group count (metadata-only, no job) is the honest test; None
     # (non-file / non-parquet / many files) means the scan parallelizes
     # by other means and the band stays off.
-    rg = (scan_parallelism(orig_df, files=src_files)
-          if cfg.parallelize_small_input else None)
-    small_input = (cfg.parallelize_small_input
-                   and (4 << 20) <= src_bytes < cores * (4 << 20)
-                   and rg is not None and rg < cores)
+    rg = scan_parallelism(orig_df, files=src_files)
+    small_input = scan_cannot_fan_out(src_bytes, rg, cores)
     # Tiny-input band (disjoint from the band above — it ends at 1 MiB,
     # the band starts at 4 MiB): the distinct-value volume of every
     # column is trivially bounded by the input bytes, so the frequency
@@ -185,12 +185,10 @@ def describe(df: DataFrame,
     # (A second tiny-input remedy — merging all agg chunks into ONE
     # job — was built and measured SLOWER everywhere; see the negative
     # result note in wide_agg.make_chunks.)
-    tiny_input = 0 < src_bytes < cfg.tiny_input_bytes
+    tiny_input = 0 < src_bytes < TINY_INPUT_BYTES
     fields = df.schema.fields
-    base_classes = [
-        S.dtype_class(f.dataType, fix_decimal=cfg.fix_decimal,
-                      profile_complex=cfg.profile_complex)
-        for f in fields]
+    base_classes = [S.dtype_class(f.dataType, fix_decimal=cfg.fix_decimal)
+                    for f in fields]
 
     # ---- overlapped job pipeline ---------------------------------------
     # Dependency-driven scheduling instead of serial passes: only MAD and
@@ -201,21 +199,15 @@ def describe(df: DataFrame,
     # pass 1.  Wall-clock drops from
     #     pass1 + (quantiles | pass2) + freq       (three barriers)
     # to  max(pass1, quantiles, freq) + pass2-lite (one barrier)
-    # with bit-identical output.  Very wide plans lose codegen'd
-    # projections at the default codegen.maxFields=100; profiles
-    # routinely exceed that.
-    try:
-        spark.conf.set("spark.sql.codegen.maxFields", "500")
-    except Exception:
-        pass
+    # with bit-identical output.
+    W.raise_codegen_max_fields(spark)
     p1_exprs = W.build_pass1_exprs(df, base_classes, cfg)
     # Correlation matrix rides pass 1 as declarative corr() expressions
     # (zero extra jobs) up to 50 numeric columns; beyond that the
     # expression count grows O(k^2) and the one-job ml.stat path wins.
     dtype_num_cols = [f.name for f, cls in zip(fields, base_classes)
                       if S.is_numeric(cls)]
-    corr_in_pass1 = (cfg.compute_correlations
-                     and cfg.corr_reject is not None
+    corr_in_pass1 = (cfg.corr_reject is not None
                      and 2 <= len(dtype_num_cols) <= 50)
     if corr_in_pass1:
         p1_exprs.extend(C.correlation_exprs(df, dtype_num_cols))
@@ -260,7 +252,7 @@ def describe(df: DataFrame,
     spec_tasks = [W.InheritableTask(chunk_thunk(ch, f"quantiles #{i}"),
                                     gate)
                   for i, ch in enumerate(
-                      W.make_chunks(q_exprs, cfg, small_input))]
+                      W.make_chunks(q_exprs, small_input))]
     # Speculative frequency pass: every base-CAT (string/bool/binary)
     # column lands in freq_cols whatever its resolved class; columns of
     # OTHER base classes only join freq_cols when they resolve CONST
@@ -278,7 +270,7 @@ def describe(df: DataFrame,
 
     freq_task = (W.InheritableTask(freq_thunk, gate)
                  if freq_spec_cols else None)
-    p1_chunks = W.make_chunks(p1_exprs, cfg, small_input)
+    p1_chunks = W.make_chunks(p1_exprs, small_input)
     p1_tasks = [W.InheritableTask(chunk_thunk(ch, f"pass1 #{i}"), gate)
                 for i, ch in enumerate(p1_chunks)]
     # Pass 2's TRUE dependency is the LIGHT pass-1 chunks only: MAD
@@ -309,12 +301,11 @@ def describe(df: DataFrame,
             raise ValueError("df cannot be empty")
 
         # ---- pass 2: MAD + histograms (light-dependent only) ----------
-        p2_exprs = W.build_pass2_exprs(df, base_classes, p1, cfg,
-                                       include_quantiles=False)
+        p2_exprs = W.build_pass2_exprs(df, base_classes, p1, cfg)
         p2_tasks = [W.InheritableTask(chunk_thunk(ch, f"pass2 #{i}"),
                                       gate)
                     for i, ch in enumerate(
-                        W.make_chunks(p2_exprs, cfg, small_input))] \
+                        W.make_chunks(p2_exprs, small_input))] \
             if p2_exprs else []
         all_tasks.extend(p2_tasks)
 
@@ -342,8 +333,7 @@ def describe(df: DataFrame,
                 if S.is_numeric(cls)]
     correlations: dict[tuple[str, str], float] = {}
     rejected: dict[str, tuple[str, float]] = {}
-    if cfg.compute_correlations and cfg.corr_reject is not None \
-            and len(num_cols) >= 2:
+    if cfg.corr_reject is not None and len(num_cols) >= 2:
         if corr_in_pass1:
             corr_safe = C.decode_correlation_row(p1, dtype_num_cols)
         else:
@@ -424,44 +414,28 @@ def _local_result_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
     Values are bit-identical: every PROFILE_SCHEMA field is
     long/double/string/bool or arrays of structs of those, and Arrow
     carries doubles/longs exactly (no pandas float64 coercion — the
-    table is built column-by-column with explicit Arrow types).
-    Falls back to the pickled-RDD path if the Arrow conversion is
-    unavailable.
+    table is built column-by-column with explicit Arrow types).  There
+    is deliberately no fallback path: a row missing a PROFILE_SCHEMA
+    key must raise here, not silently demote every profile to slower
+    collects.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow_schema = to_arrow_schema(PROFILE_SCHEMA)
+    arrays = [
+        pa.array([r[f.name] for r in rows], type=arrow_schema.types[i])
+        for i, f in enumerate(PROFILE_SCHEMA.fields)]
+    tbl = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    out = spark.createDataFrame(tbl, schema=PROFILE_SCHEMA)
     try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        arrow_schema = to_arrow_schema(PROFILE_SCHEMA)
-        arrays = [
-            pa.array([r[f.name] for r in rows], type=arrow_schema.types[i])
-            for i, f in enumerate(PROFILE_SCHEMA.fields)]
-        tbl = pa.Table.from_arrays(arrays, schema=arrow_schema)
-        out = spark.createDataFrame(tbl, schema=PROFILE_SCHEMA)
-        try:
-            # Force analysis+planning now (no job): Dataset caches its
-            # queryExecution, so the caller's first action pays only
-            # execution instead of the full compile (~10ms less per
-            # collect; this runs inside the overlapped profile window)
-            out._jdf.queryExecution().executedPlan()
-        except Exception:
-            pass
-        return out
-    except Exception as exc:
-        # One explicit slice (not defaultParallelism): the frame is
-        # O(#cols) rows by construction.  LOUD fallback: the pickled-RDD
-        # frame round-trips a Python worker on EVERY later action
-        # (~150ms per collect vs ~15ms) — a silent fallback hid a
-        # KeyError for a full round (r16: _assemble_row omitted the
-        # jarque_bera key on non-numeric columns, so every real profile
-        # quietly kept the slow path while the Arrow micro-benchmarks,
-        # built with all-keys rows, looked great).
-        import warnings
-        warnings.warn(
-            f"profile result frame: Arrow construction failed "
-            f"({type(exc).__name__}: {exc}); falling back to the "
-            f"pickled-RDD path (slower collects)")
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), PROFILE_SCHEMA)
+        # Force analysis+planning now (no job): Dataset caches its
+        # queryExecution, so the caller's first action pays only
+        # execution instead of the full compile (~10ms less per
+        # collect; this runs inside the overlapped profile window)
+        out._jdf.queryExecution().executedPlan()
+    except Exception:
+        pass
+    return out
 
 
 def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
@@ -541,7 +515,7 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
         if std is not None and mean is not None and mean != 0 \
                 and math.isfinite(mean):
             row["cv"] = std / mean
-        if cfg.compute_histograms and mn is not None and mx is not None \
+        if mn is not None and mx is not None \
                 and math.isfinite(mn) and math.isfinite(mx):
             row["histogram"] = _histogram_from(p2, i, mn, mx, cnt, cfg)
     elif cls == S.DATE:
@@ -552,8 +526,7 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
             "range_seconds": W.date_range_seconds(mn_d, mx_d),
         })
         mn_e, mx_e = W._to_epoch(mn_d), W._to_epoch(mx_d)
-        if cfg.compute_histograms and mn_e is not None and mx_e is not None \
-                and mx_e > mn_e:
+        if mn_e is not None and mx_e is not None and mx_e > mn_e:
             row["histogram"] = _histogram_from(p2, i, mn_e, mx_e, cnt, cfg)
     elif cls in (S.ARRAY, S.MAP):
         ms = p1.get(k(i, "mean_size"))

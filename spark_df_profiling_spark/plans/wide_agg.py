@@ -8,10 +8,10 @@ it as one 2-phase HashAggregate (partial map-side + final), so the input is
 scanned exactly once regardless of column count.
 
 Scale notes (100 TB):
-* Expression lists are chunked at ``cfg.max_agg_exprs`` to stay clear of
-  whole-stage-codegen's 64KB method / constant-pool limits — each chunk is
-  an independent single-pass job (SURVEY §4 "our one real physical-design
-  risk").
+* Expression lists are chunked by buffer class at the budgeted caps of
+  :func:`make_chunks` to stay clear of whole-stage codegen's field and
+  64KB method / constant-pool limits — each chunk is an independent
+  single-pass job (SURVEY §4 "our one real physical-design risk").
 * Distinct counts default to ``approx_count_distinct`` (HLL++): exact
   multi-column countDistinct forces an Expand-based plan whose row
   multiplication is catastrophic at scale.  The oracle/test path flips
@@ -35,7 +35,18 @@ from spark_df_profiling_spark import schema as S
 from spark_df_profiling_spark.config import ProfileConfig
 
 
-def _key(i: int, stat: str) -> str:
+# HLL++ relative standard deviation for approximate distinct counts.
+# 0.05 benches ~14x faster than 0.01 (Spark's HLL++ register count grows
+# steeply with precision); ±5% distinct counts is plenty for type
+# dispatch and report display.  Oracle tests run exact anyway.
+_DISTINCT_RSD = 0.05
+# Quantile probabilities; the profile assembler labels them q05..q95.
+_QUANTILES = (0.05, 0.25, 0.5, 0.75, 0.95)
+_QUANTILE_ACCURACY = 10000  # percentile_approx accuracy parameter
+
+
+def stat_key(i: int, stat: str) -> str:
+    """Result alias of statistic ``stat`` for column ``i``."""
     return f"c{i}__{stat}"
 
 
@@ -62,15 +73,14 @@ def build_pass1_exprs(df: DataFrame, classes: list[str],
     exprs: list[str] = ["count(1) AS `__n`"]
     for i, (field, cls) in enumerate(zip(df.schema.fields, classes)):
         c = f"`{field.name}`"
-        k = _key(i, "count")
-        exprs.append(f"count({c}) AS `{k}`")
+        exprs.append(f"count({c}) AS `{stat_key(i, 'count')}`")
         if cfg.exact_distinct:
             exprs.append(
-                f"count(DISTINCT {c}) AS `{_key(i, 'distinct')}`")
+                f"count(DISTINCT {c}) AS `{stat_key(i, 'distinct')}`")
         else:
             exprs.append(
-                f"approx_count_distinct({c}, {cfg.distinct_rsd!r}) "
-                f"AS `{_key(i, 'distinct')}`")
+                f"approx_count_distinct({c}, {_DISTINCT_RSD!r}) "
+                f"AS `{stat_key(i, 'distinct')}`")
         # NOTE: no first()/min()/max() over STRING columns here — a single
         # string-buffered aggregate disqualifies HashAggregateExec (string
         # buffers are immutable in UnsafeRow) and demotes the ENTIRE wide
@@ -81,40 +91,40 @@ def build_pass1_exprs(df: DataFrame, classes: list[str],
         if S.is_numeric(cls):
             cd = f"CAST({c} AS DOUBLE)"
             exprs.extend([
-                f"avg({cd}) AS `{_key(i, 'mean')}`",
-                f"CAST(min({c}) AS DOUBLE) AS `{_key(i, 'min')}`",
-                f"CAST(max({c}) AS DOUBLE) AS `{_key(i, 'max')}`",
-                f"var_samp({cd}) AS `{_key(i, 'variance')}`",
-                f"stddev_samp({cd}) AS `{_key(i, 'std')}`",
-                f"skewness({cd}) AS `{_key(i, 'skewness')}`",
-                f"kurtosis({cd}) AS `{_key(i, 'kurtosis')}`",
-                f"sum({cd}) AS `{_key(i, 'sum')}`",
+                f"avg({cd}) AS `{stat_key(i, 'mean')}`",
+                f"CAST(min({c}) AS DOUBLE) AS `{stat_key(i, 'min')}`",
+                f"CAST(max({c}) AS DOUBLE) AS `{stat_key(i, 'max')}`",
+                f"var_samp({cd}) AS `{stat_key(i, 'variance')}`",
+                f"stddev_samp({cd}) AS `{stat_key(i, 'std')}`",
+                f"skewness({cd}) AS `{stat_key(i, 'skewness')}`",
+                f"kurtosis({cd}) AS `{stat_key(i, 'kurtosis')}`",
+                f"sum({cd}) AS `{stat_key(i, 'sum')}`",
                 f"sum(CASE WHEN {c} = 0 THEN 1 ELSE 0 END) "
-                f"AS `{_key(i, 'zeros')}`",
+                f"AS `{stat_key(i, 'zeros')}`",
             ])
             if cls == S.NUM_FLOAT:
                 exprs.append(
                     f"sum(CASE WHEN {cd} IN (double('Infinity'), "
                     f"double('-Infinity')) THEN 1 ELSE 0 END) "
-                    f"AS `{_key(i, 'inf')}`")
+                    f"AS `{stat_key(i, 'inf')}`")
                 exprs.append(
                     f"sum(CASE WHEN isnan({cd}) THEN 1 ELSE 0 END) "
-                    f"AS `{_key(i, 'nan')}`")
-            # NOTE: quantiles deliberately live in pass 2 — a single
+                    f"AS `{stat_key(i, 'nan')}`")
+            # NOTE: quantiles deliberately stay out of pass 1 — a single
             # percentile/percentile_approx expression demotes the WHOLE
             # aggregate from HashAggregate(codegen) to ObjectHashAggregate
-            # (interpreted), slowing every other expression ~2x.  Keeping
-            # pass 1 sketch-free keeps it inside whole-stage codegen.
+            # (interpreted), slowing every other expression ~2x.  They
+            # run as their own chunks (build_quantile_exprs).
         elif cls == S.DATE:
-            exprs.append(f"min({c}) AS `{_key(i, 'min_date')}`")
-            exprs.append(f"max({c}) AS `{_key(i, 'max_date')}`")
+            exprs.append(f"min({c}) AS `{stat_key(i, 'min_date')}`")
+            exprs.append(f"max({c}) AS `{stat_key(i, 'max_date')}`")
         elif cls in (S.ARRAY, S.MAP):
             exprs.extend([
-                f"avg(size({c})) AS `{_key(i, 'mean_size')}`",
+                f"avg(size({c})) AS `{stat_key(i, 'mean_size')}`",
                 f"CAST(min(size({c})) AS BIGINT) "
-                f"AS `{_key(i, 'min_size')}`",
+                f"AS `{stat_key(i, 'min_size')}`",
                 f"CAST(max(size({c})) AS BIGINT) "
-                f"AS `{_key(i, 'max_size')}`",
+                f"AS `{stat_key(i, 'max_size')}`",
             ])
     return exprs
 
@@ -134,45 +144,41 @@ def build_quantile_exprs(df: DataFrame, base_classes: list[str],
     one wasted sketch for the (rare) constant numeric column.
     """
     exprs: list[str] = []
-    qs = ", ".join(repr(q) for q in cfg.quantiles)
+    qs = ", ".join(repr(q) for q in _QUANTILES)
     for i, (field, cls) in enumerate(zip(df.schema.fields, base_classes)):
         if not S.is_numeric(cls):
             continue
         c = f"CAST(`{field.name}` AS DOUBLE)"
         if cfg.exact_quantiles:
             exprs.append(f"percentile({c}, array({qs})) "
-                         f"AS `{_key(i, 'quantiles')}`")
+                         f"AS `{stat_key(i, 'quantiles')}`")
         else:
             exprs.append(
                 f"percentile_approx({c}, array({qs}), "
-                f"{cfg.quantile_accuracy}) AS `{_key(i, 'quantiles')}`")
+                f"{_QUANTILE_ACCURACY}) AS `{stat_key(i, 'quantiles')}`")
     return exprs
 
 
 def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
-                      cfg: ProfileConfig,
-                      include_quantiles: bool = True) -> list[str]:
-    """Pass-2 SQL expressions: quantiles (N6), MAD (N10), histograms (N12).
+                      cfg: ProfileConfig) -> list[str]:
+    """Pass-2 SQL expressions: MAD (N10) and histograms (N12).
 
     MAD is the reference's *mean* absolute deviation around the mean
     (``base.py::describe>>describe_integer_1d``), an inherently two-pass
     statistic.  Histogram bins are equal-width on [min, max] with the last
     bin right-closed, matching ``base.py::describe>>create_hist_data``.
-    Quantile sketches sit here (not pass 1) so the ObjectHashAggregate
-    they force is paid once, on this smaller expression set — and the
-    orchestrator passes ``include_quantiles=False`` to issue them via
-    :func:`build_quantile_exprs` concurrently WITH pass 1 instead (they
-    are the only pass-2 statistic with no pass-1 dependency).  Bin-edge
-    literals are emitted with :func:`_dlit`, so the SQL form computes the
-    bit-exact same bins as driver-side float arithmetic.
+    Quantiles have no pass-1 dependency, so they are built by
+    :func:`build_quantile_exprs` and run concurrently WITH pass 1.
+    Bin-edge literals are emitted with :func:`_dlit`, so the SQL form
+    computes the bit-exact same bins as driver-side float arithmetic.
     """
     exprs: list[str] = []
     for i, (field, cls) in enumerate(zip(df.schema.fields, classes)):
-        if cls == S.DATE and cfg.compute_histograms:
+        if cls == S.DATE:
             # D3 extension (reference has no date histogram): equal-width
             # bins over epoch seconds, edges from pass-1 min/max.
-            mn_d = pass1.get(_key(i, "min_date"))
-            mx_d = pass1.get(_key(i, "max_date"))
+            mn_d = pass1.get(stat_key(i, "min_date"))
+            mx_d = pass1.get(stat_key(i, "max_date"))
             mn_e = _to_epoch(mn_d)
             mx_e = _to_epoch(mx_d)
             if mn_e is not None and mx_e is not None and mx_e > mn_e:
@@ -189,31 +195,20 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
                                 f"AND {ep} < {_dlit(right)}")
                     exprs.append(
                         f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
-                        f"AS `{_key(i, f'hist{b}')}`")
+                        f"AS `{stat_key(i, f'hist{b}')}`")
             continue
         if not S.is_numeric(cls):
             continue
-        cnt = pass1.get(_key(i, "count")) or 0
-        mean = pass1.get(_key(i, "mean"))
-        mn = pass1.get(_key(i, "min"))
-        mx = pass1.get(_key(i, "max"))
+        cnt = pass1.get(stat_key(i, "count")) or 0
+        mean = pass1.get(stat_key(i, "mean"))
+        mn = pass1.get(stat_key(i, "min"))
+        mx = pass1.get(stat_key(i, "max"))
         c = f"CAST(`{field.name}` AS DOUBLE)"
-        if include_quantiles and cnt > 0:
-            qs = ", ".join(repr(q) for q in cfg.quantiles)
-            if cfg.exact_quantiles:
-                exprs.append(f"percentile({c}, array({qs})) "
-                             f"AS `{_key(i, 'quantiles')}`")
-            else:
-                exprs.append(
-                    f"percentile_approx({c}, array({qs}), "
-                    f"{cfg.quantile_accuracy}) AS `{_key(i, 'quantiles')}`")
-        if cfg.compute_mad and cnt > 0 and mean is not None \
-                and math.isfinite(mean):
+        if cnt > 0 and mean is not None and math.isfinite(mean):
             exprs.append(f"avg(abs({c} - {_dlit(mean)})) "
-                         f"AS `{_key(i, 'mad')}`")
-        if cfg.compute_histograms and cnt > 0 and mn is not None \
-                and mx is not None and math.isfinite(mn) and math.isfinite(mx) \
-                and mx > mn:
+                         f"AS `{stat_key(i, 'mad')}`")
+        if cnt > 0 and mn is not None and mx is not None \
+                and math.isfinite(mn) and math.isfinite(mx) and mx > mn:
             width = (mx - mn) / cfg.bins
             for b in range(cfg.bins):
                 left = mn + width * b
@@ -225,7 +220,7 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
                     cond = (f"{c} >= {_dlit(left)} AND {c} < {_dlit(right)} "
                             f"AND NOT isnan({c})")
                 exprs.append(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
-                             f"AS `{_key(i, f'hist{b}')}`")
+                             f"AS `{stat_key(i, f'hist{b}')}`")
     return exprs
 
 
@@ -269,10 +264,30 @@ def _expr_class(s: str) -> str:
     return "light"
 
 
+# Whole-stage codegen field ceiling the chunk caps below are budgeted
+# against (Spark's default is 100; a wide profile's plans exceed it).
+_CODEGEN_MAX_FIELDS = 500
+
+
+def raise_codegen_max_fields(spark) -> None:
+    """Set ``spark.sql.codegen.maxFields`` to the budget the chunk caps
+    assume.  Past the default 100 fields Spark silently demotes a whole
+    aggregate (or a very wide projection) to interpreted execution —
+    measured 2.7s vs 0.8s codegen'd for the 8-column pair matrix on sf0.1
+    lineitem.  Every operator that runs chunked aggregates calls this
+    itself rather than relying on another having run first in the
+    session."""
+    try:
+        spark.conf.set("spark.sql.codegen.maxFields",
+                       str(_CODEGEN_MAX_FIELDS))
+    except Exception:
+        pass
+
+
 # Budgeted chunk sizes (buffer-slot aware, see _expr_class):
 # light: worst case ~6 slots/expr (corr) -> 64 exprs ~= 384 slots, safely
-# under the codegen.maxFields=500 we set; sketch/object: execution is
-# per-row cheap / already interpreted, cap only to bound planning time.
+# under _CODEGEN_MAX_FIELDS; sketch/object: execution is per-row cheap /
+# already interpreted, cap only to bound planning time.
 _CHUNK_CAP = {"light": 64, "sketch": 48, "object": 32, "pair": 40}
 
 
@@ -289,7 +304,7 @@ _CHUNK_CAP = {"light": 64, "sketch": 48, "object": 32, "pair": 40}
 _CHUNK_CAP_SMALL = {"light": 16, "sketch": 3, "object": 1, "pair": 4}
 
 
-def make_chunks(exprs: list[str], cfg: ProfileConfig,
+def make_chunks(exprs: list[str],
                 small_input: bool = False) -> list[list[str]]:
     """Split aggregate expressions into buffer-class-homogeneous chunks.
 
@@ -332,14 +347,13 @@ def make_chunks(exprs: list[str], cfg: ProfileConfig,
         groups[_expr_class(e)].append(e)
     chunks: list[list[str]] = []
     for klass, es in groups.items():
-        step = max(1, min(cfg.max_agg_exprs, caps[klass]))
+        step = caps[klass]
         for start in range(0, len(es), step):
             chunks.append(es[start:start + step])
     return chunks
 
 
 def run_chunked_agg(df: DataFrame, exprs: list[str],
-                    cfg: ProfileConfig,
                     small_input: bool = False) -> dict[str, Any]:
     """Execute a wide agg, chunked by buffer class, chunks run CONCURRENTLY.
 
@@ -368,7 +382,7 @@ def run_chunked_agg(df: DataFrame, exprs: list[str],
     out: dict[str, Any] = {}
     if not exprs:
         return out
-    chunks = make_chunks(exprs, cfg, small_input)
+    chunks = make_chunks(exprs, small_input)
     if len(chunks) == 1:
         return df.selectExpr(*chunks[0]).collect()[0].asDict()
     rows = run_inheritable(
@@ -462,11 +476,6 @@ class InheritableTask:
         """Join without raising (error-path cleanup: don't leave Spark
         jobs running behind an exception)."""
         self._thread.join()
-
-
-def stat_key(i: int, stat: str) -> str:
-    """Public accessor for the alias scheme (used by the orchestrator)."""
-    return _key(i, stat)
 
 
 def _to_epoch(v: Any) -> float | None:

@@ -12,8 +12,8 @@ Notes on preserved/fixed quirks:
   ``decimal(p,s)`` falls through to the CAT/UNIQUE path; with
   ``fix_decimal`` (default True) we dispatch DecimalType to NUM(float).
 * The reference raises ``NotImplementedError`` for complex types (and its
-  guard spells "stuct", letting struct columns crash later); we profile
-  complex columns structurally when ``profile_complex`` is set.
+  guard spells "stuct", letting struct columns crash later); we always
+  profile array/map/struct columns structurally.
 * CONST/UNIQUE resolution needs distinct counts, which we only know after
   pass 1 — so dispatch happens in two stages: :func:`dtype_class` (schema
   only, decides which expressions enter the wide agg) and
@@ -35,15 +35,13 @@ CORR = "CORR"
 ARRAY = "ARRAY"
 MAP = "MAP"
 STRUCT = "STRUCT"
-UNSUPPORTED = "UNSUPPORTED"
 
 _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FLOAT_TYPES = (T.FloatType, T.DoubleType)
 _DATE_TYPES = (T.DateType, T.TimestampType, T.TimestampNTZType)
 
 
-def dtype_class(dtype: T.DataType, *, fix_decimal: bool = True,
-                profile_complex: bool = True) -> str:
+def dtype_class(dtype: T.DataType, *, fix_decimal: bool = True) -> str:
     """Schema-only dispatch (stage 1). CONST/UNIQUE applied later."""
     if isinstance(dtype, _INT_TYPES):
         return NUM_INT
@@ -56,11 +54,11 @@ def dtype_class(dtype: T.DataType, *, fix_decimal: bool = True,
     if isinstance(dtype, _DATE_TYPES):
         return DATE
     if isinstance(dtype, T.ArrayType):
-        return ARRAY if profile_complex else UNSUPPORTED
+        return ARRAY
     if isinstance(dtype, T.MapType):
-        return MAP if profile_complex else UNSUPPORTED
+        return MAP
     if isinstance(dtype, T.StructType):
-        return STRUCT if profile_complex else UNSUPPORTED
+        return STRUCT
     # string, boolean, binary, anything else -> categorical path
     return CAT
 
@@ -73,8 +71,7 @@ def resolve_class(base_class: str, distinct_count: int, n_rows: int) -> str:
     """
     if distinct_count <= 1:
         return CONST
-    if base_class in (NUM_INT, NUM_FLOAT, DATE, ARRAY, MAP, STRUCT,
-                      UNSUPPORTED):
+    if base_class in (NUM_INT, NUM_FLOAT, DATE, ARRAY, MAP, STRUCT):
         return base_class
     if n_rows > 0 and distinct_count == n_rows:
         return UNIQUE

@@ -141,10 +141,18 @@ def test_no_rejection_on_lineitem(lineitem_profile):
 
 
 def test_profile_returns_dataframe(lineitem):
-    df = profile(lineitem, ProfileConfig(compute_correlations=False,
-                                         compute_histograms=False,
-                                         compute_mad=False))
+    df = profile(lineitem, ProfileConfig(corr_reject=None))
     assert df.count() == 11
+
+
+def test_exact_keeps_other_fields():
+    from dataclasses import asdict
+    cfg = ProfileConfig(bins=20, top_k=5, corr_reject=None)
+    ex = cfg.exact()
+    assert (ex.bins, ex.top_k, ex.corr_reject) == (20, 5, None)
+    assert ex.exact_distinct and ex.exact_quantiles
+    changed = {k for k, v in asdict(ex).items() if asdict(cfg)[k] != v}
+    assert changed == {"exact_distinct", "exact_quantiles"}
 
 
 def test_approx_mode_close(lineitem):

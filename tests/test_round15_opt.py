@@ -4,8 +4,6 @@ minhash persist toggle, pow-free sig() rounding."""
 import pytest
 from pyspark.sql import functions as F
 
-from spark_df_profiling_spark.config import ProfileConfig
-
 
 @pytest.fixture(scope="module")
 def li(spark, sf_dir):
@@ -15,14 +13,13 @@ def li(spark, sf_dir):
 def test_make_chunks_small_input_caps():
     from spark_df_profiling_spark.plans.wide_agg import (
         _CHUNK_CAP, _CHUNK_CAP_SMALL, make_chunks)
-    cfg = ProfileConfig()
     exprs = ([f"count(`c{i}`) AS `k{i}`" for i in range(40)]
              + [f"approx_count_distinct(`c{i}`) AS `d{i}`"
                 for i in range(7)]
              + [f"percentile_approx(`c{i}`, 0.5, 100) AS `q{i}`"
                 for i in range(3)])
     for small, caps in ((False, _CHUNK_CAP), (True, _CHUNK_CAP_SMALL)):
-        chunks = make_chunks(exprs, cfg, small_input=small)
+        chunks = make_chunks(exprs, small_input=small)
         # partition property: every expr in exactly one chunk
         flat = [e for ch in chunks for e in ch]
         assert sorted(flat) == sorted(exprs)
@@ -45,7 +42,6 @@ def test_chunking_is_value_preserving(spark, li):
     """The same aggregate expressions produce identical values whether
     evaluated as one wide selectExpr or as fine per-class chunks."""
     from spark_df_profiling_spark.plans.wide_agg import make_chunks
-    cfg = ProfileConfig()
     exprs = [
         "count(1) AS `n`",
         "sum(CAST(l_quantity AS DOUBLE)) AS `s`",
@@ -57,12 +53,13 @@ def test_chunking_is_value_preserving(spark, li):
     ]
     one = li.selectExpr(*exprs).collect()[0].asDict()
     merged = {}
-    for ch in make_chunks(exprs, cfg, small_input=True):
+    for ch in make_chunks(exprs, small_input=True):
         merged.update(li.selectExpr(*ch).collect()[0].asDict())
     assert merged == one
 
 
-def test_parallelize_small_scan_bands(spark, tmp_path):
+def test_parallelize_small_scan_bands(spark, tmp_path, monkeypatch):
+    from spark_df_profiling_spark import sources
     from spark_df_profiling_spark.sources import (
         input_bytes, parallelize_small_scan)
     cores = spark.sparkContext.defaultParallelism
@@ -81,7 +78,8 @@ def test_parallelize_small_scan_bands(spark, tmp_path):
     assert out.rdd.getNumPartitions() == cores
     assert out.count() == 200_000
     # above-band: inert
-    big = parallelize_small_scan(df, max_bytes_per_core=1)
+    monkeypatch.setattr(sources, "CORE_SCAN_BYTES", 1)
+    big = parallelize_small_scan(df)
     assert big is df
 
 

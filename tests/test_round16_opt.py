@@ -162,20 +162,20 @@ def test_local_result_frame_arrow_exactness(spark):
     assert a[0]["freq"][0]["cnt"] == 2**55 + 3
 
 
-def test_tiny_input_band_identical(spark):
+def test_tiny_input_band_identical(spark, monkeypatch):
     """Sub-MiB file-backed inputs run the single-phase frequency form
     (two_phase=False) — the full describe() result must be identical
-    to the band disabled (tiny_input_bytes=0), in default AND exact
+    to the band disabled (TINY_INPUT_BYTES=0), in default AND exact
     mode."""
-    from dataclasses import replace
-
     from spark_df_profiling_spark.config import ProfileConfig
-    from spark_df_profiling_spark.operators.profile import describe
+    from spark_df_profiling_spark.operators import profile as P
 
     df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     for cfg in (ProfileConfig(), ProfileConfig().exact()):
-        tiny = describe(df, cfg)
-        std = describe(df, replace(cfg, tiny_input_bytes=0))
+        tiny = P.describe(df, cfg)
+        with monkeypatch.context() as m:
+            m.setattr(P, "TINY_INPUT_BYTES", 0)
+            std = P.describe(df, cfg)
         assert tiny.variables.collect() == std.variables.collect()
         assert tiny.table == std.table and tiny.freq == std.freq
 

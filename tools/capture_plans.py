@@ -60,8 +60,6 @@ def main() -> None:
         from spark_df_profiling_spark.plans import wide_agg as W
 
         sections: list[str] = []
-        orig_run = W.run_chunked_agg
-
         orig_make = W.make_chunks
 
         def _chunk_df(ch):
@@ -71,8 +69,8 @@ def main() -> None:
             safe = d.toDF(*[f"__c{i}" for i in range(len(d.columns))])
             return safe.selectExpr(*ch)
 
-        def spy_make(exprs, cfg, small_input=False):
-            chunks = orig_make(exprs, cfg, small_input)
+        def spy_make(exprs, small_input=False):
+            chunks = orig_make(exprs, small_input)
             for ch in chunks:
                 sections.append(
                     f"=== chunked agg [{W._expr_class(ch[0])}] "
@@ -124,8 +122,8 @@ def main() -> None:
             sel = li.select(*[li[c].cast("double").alias(s)
                               for c, s in zip(cols, safe)])
 
-            def spy_make(exprs, cfg, small_input=False):
-                chunks = orig_make(exprs, cfg, small_input)
+            def spy_make(exprs, small_input=False):
+                chunks = orig_make(exprs, small_input)
                 for ch in chunks:
                     sections.append(
                         f"=== declarative corr chunk "
